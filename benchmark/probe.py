@@ -24,6 +24,9 @@ import time
 
 CANARY_LOOPS = 1_000_000
 CHASE_STEPS = 400_000
+# Set-up time is reported in seconds on a host whose canary reads this:
+# a fast minute on the 4-core host of README.md (Measured spread).
+CANARY_REF_S = 0.11
 _CHAIN: list[int] = []
 
 

@@ -1,15 +1,17 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 benchmark/run.py --workload mr_corpus --seed 1 --seconds 20 --trace 0
+    python3 benchmark/run.py --workload mr_corpus --seed 1 --seconds 6 --trace 0
 
 One driver process on ``local[nproc]`` runs passes back to back (a
 closed loop). The run is:
 
 1. set-up: ``get_spark``, ``warm_python_worker_pool``, then the seeded
    inputs and expected results, built ``SETUP_REPS`` times;
-2. one cold pass, then the one-time checks that need Spark;
+2. one cold pass, which for the query workloads also compares each
+   full result with its DuckDB oracle;
 3. warm-up passes until pass time stops falling;
-4. measured passes for ``--seconds``, each after a host canary.
+4. measured passes for ``--seconds`` (at least ``MIN_PASSES``), with
+   host canary readings taken between the steps of each pass.
 
 Every pass is checked; a pass that raises counts as failed and the run
 goes on. With ``--trace 1`` every other measured pass is traced and
@@ -34,12 +36,14 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 SETUP_REPS = 3
-MIN_PASSES = 3
+MIN_PASSES = 2
 # Warm-up lasts at least this share of --seconds, then ends at the
 # first pass that does not beat the best earlier one by WARMUP_GAIN,
 # and at the latest after --seconds.
 WARMUP_MIN_SHARE = 2 / 3
 WARMUP_GAIN = 0.05
+# Least pass time between two canary readings inside a measured pass.
+CANARY_EVERY_S = 2.0
 
 
 def _tail(xs) -> tuple[int, float] | None:
@@ -92,21 +96,49 @@ class Runner:
         self.attempted = self.ok = 0
         self.output_mb: list[float] = []
 
-    def one_pass(self, tracer=None, check_now: bool = True) -> float:
-        """Run one pass; return its wall time. Failures are counted."""
+    def one_pass(self, tracer=None, check_now: bool = True, canary=None) -> float:
+        """Run one pass; return its wall time. Failures are counted.
+
+        With ``canary``, the host canary is also read before the first
+        step, before each later step once ``CANARY_EVERY_S`` of steps
+        have run since the last reading, and after the last step. The
+        returned wall time then leaves out the readings, and
+        ``self.norm`` is the pass in canary units: the wall time of each
+        stretch of steps over the mean of the readings around it."""
         self.attempted += 1
-        t0 = time.perf_counter()
+        total, stretch, norm, readings = 0.0, 0.0, 0.0, []
+        self.step_s = []
+
+        def read():
+            nonlocal stretch, norm
+            readings.append(canary.time())
+            if len(readings) > 1:
+                norm += stretch / ((readings[-2] + readings[-1]) / 2)
+                stretch = 0.0
+
+        failed = False
         try:
-            self.wl.run_pass(tracer)
-            failed = False
+            for step in self.wl.steps(tracer):
+                if canary is not None and (not readings or stretch >= CANARY_EVERY_S):
+                    read()
+                t0 = time.perf_counter()
+                try:
+                    step()
+                finally:
+                    dt = time.perf_counter() - t0
+                    self.step_s.append(dt)
+                    total += dt
+                    stretch += dt
         except Exception:
             traceback.print_exc()
             failed = True
-        wall = time.perf_counter() - t0
+        if canary is not None:
+            read()
+            self.readings, self.norm = readings, norm
         self._failed = failed
         if check_now:
             self.finish_check()
-        return wall
+        return total
 
     def finish_check(self) -> None:
         if not self._failed and self.wl.check():
@@ -125,11 +157,14 @@ def run(args) -> dict:
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
         spec = json.load(f)
+    t_start = time.perf_counter()
     nproc = len(os.sched_getaffinity(0))
     steal0, ticks0 = probe.cpu_ticks()
     canary = probe.Canary(nproc)
     spark = None
     try:
+        # Canary readings between the set-up phases (not timed in them).
+        sc = [canary.time()]
         t0 = time.perf_counter()
         spark = get_spark(
             app_name=f"bench-{args.workload}",
@@ -138,9 +173,11 @@ def run(args) -> dict:
         )
         spark.sparkContext.setLogLevel("ERROR")
         get_spark_s = time.perf_counter() - t0
+        sc.append(canary.time())
         t0 = time.perf_counter()
         warm_python_worker_pool(spark)
         warm_pool_s = time.perf_counter() - t0
+        sc.append(canary.time())
 
         wl = WORKLOADS[args.workload](spark, args.work, args.seed, args.size)
         input_s = []
@@ -148,12 +185,17 @@ def run(args) -> dict:
             t0 = time.perf_counter()
             input_mb = wl.make_inputs(os.path.join(args.work, "inputs"))
             input_s.append(time.perf_counter() - t0)
-        setup_s = get_spark_s + warm_pool_s + median(input_s)
+        sc.append(canary.time())
+        setup_raw_s = get_spark_s + warm_pool_s + median(input_s)
+        # Each phase over the mean of the readings around it, in seconds
+        # on a host whose canary reads CANARY_REF_S.
+        setup_s = probe.CANARY_REF_S * sum(
+            t / ((a + b) / 2)
+            for t, a, b in zip((get_spark_s, warm_pool_s, median(input_s)), sc, sc[1:])
+        )
 
         r = Runner(wl)
-        cold_s = r.one_pass(check_now=False)
-        setup_ok = wl.verify_setup()
-        r.finish_check()
+        cold_s = r.one_pass()
 
         warm, best, t_warm = [], math.inf, time.perf_counter()
         while True:
@@ -168,13 +210,12 @@ def run(args) -> dict:
                 break
             best = min(best, dt)
 
-        # walls[k] ran between canaries[at[k]] and canaries[at[k] + 1].
-        walls, at, canaries, traced, layer_rows = [], [], [], [], []
+        walls, norms, step_s, canaries, traced, layer_rows = [], [], [], [], [], []
         t_meas = time.perf_counter()
         i = 0
-        while (time.perf_counter() - t_meas < args.seconds or len(walls) < MIN_PASSES) and i < 10_000:
-            canaries.append(canary.time())
-            if args.trace and i % 2 == 1:
+        while (time.perf_counter() - t_meas < args.seconds or i < MIN_PASSES) and i < 10_000:
+            i += 1
+            if args.trace and i % 2 == 0:
                 tracer = Tracer(spark, r.attempted)
                 cpu0 = probe.tree_cpu_s(os.getpid())
                 lo = time.time() * 1000.0
@@ -182,6 +223,9 @@ def run(args) -> dict:
                 hi = time.time() * 1000.0
                 cpu1 = probe.tree_cpu_s(os.getpid())
                 r.finish_check()
+                if r._failed:
+                    # A pass that raised has no complete spans or stages.
+                    continue
                 for rec in tracer.calls:
                     rec["stages"], rec["jobs"] = probe.stage_records(spark, rec["group"])
                 row = exec_metrics(tracer.calls, lo, hi, nproc)
@@ -190,10 +234,10 @@ def run(args) -> dict:
                 layer_rows.append(row)
                 traced.append(dt)
             else:
-                walls.append(r.one_pass())
-                at.append(i)
-            i += 1
-        canaries.append(canary.time())
+                walls.append(r.one_pass(canary=canary))
+                norms.append(r.norm)
+                step_s.append(r.step_s)
+                canaries.extend(r.readings)
 
         probes = wl.probe_layers() if args.trace else {}
     finally:
@@ -201,9 +245,8 @@ def run(args) -> dict:
         if spark is not None:
             _stop_spark(spark)
     steal1, ticks1 = probe.cpu_ticks()
+    run_s = time.perf_counter() - t_start
 
-    # Each pass against the mean of the canaries just before and after it.
-    norms = [w / ((canaries[k] + canaries[k + 1]) / 2) for w, k in zip(walls, at)]
     tail = _tail(walls)
     record = {
         "workload": args.workload,
@@ -215,11 +258,13 @@ def run(args) -> dict:
         "canary_s_p50": median(canaries),
         "steal_frac": (steal1 - steal0) / max(1, ticks1 - ticks0),
         "input_mb": input_mb,
-        "setup": {"get_spark_s": get_spark_s, "warm_pool_s": warm_pool_s, "inputs_s": input_s},
-        "setup_verified": setup_ok,
+        "setup": {"raw_s": setup_raw_s, "get_spark_s": get_spark_s, "warm_pool_s": warm_pool_s,
+                  "inputs_s": input_s, "canary_s": sc},
         "cold_pass_s": cold_s,
         "warmup_pass_s": warm,
         "pass_s": walls,
+        "pass_norm": norms,
+        "pass_steps_s": step_s,
         "canary_s": canaries,
         "traced_pass_s": traced,
         "pass_s_tail": (
@@ -230,6 +275,7 @@ def run(args) -> dict:
         ),
         "attempted": r.attempted,
         "ok": r.ok,
+        "run_s": run_s,
     }
     e2e = {
         "setup_s": setup_s,
@@ -250,14 +296,15 @@ def run(args) -> dict:
         layers["host.canary_s"] = record["canary_s_p50"]
         layers["host.steal_frac"] = record["steal_frac"]
         layers["sink.output_mb"] = median(r.output_mb)
-        layers["trace.overhead_s"] = median(traced) - median(walls)
+        if traced:
+            layers["trace.overhead_s"] = median(traced) - median(walls)
         record["per_layer"] = layers
         # A layer this workload does not drive did no work: report 0.
         chosen = {m["name"]: (layers.get(m["name"], 0.0), m["unit"]) for m in spec["per_layer"]}
     else:
         chosen = {m["name"]: (e2e[m["name"]], m["unit"]) for m in spec["end_to_end"]}
     record["result"] = {
-        "correct": setup_ok and r.ok == r.attempted,
+        "correct": r.ok == r.attempted,
         "attempted": r.attempted,
         "failed": r.attempted - r.ok,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in chosen.items()},
@@ -267,7 +314,8 @@ def run(args) -> dict:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=["mr_corpus", "df_queries"])
+    ap.add_argument("--workload", required=True,
+                    choices=["mr_corpus", "df_queries"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -280,6 +328,10 @@ def main(argv=None) -> int:
         record = run(args)
     finally:
         shutil.rmtree(args.work, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(args.work))
+        except OSError:  # another run's files are still there
+            pass
     print(json.dumps({"record": record}))
     print(json.dumps(record["result"]), flush=True)
     return 0

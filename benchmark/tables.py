@@ -1,4 +1,5 @@
-"""Seeded star-schema tables for the ``df_queries`` workload.
+"""Seeded star-schema tables for the ``df_queries`` and
+``pipeline_loops`` workloads.
 
 Writes one parquet file per table, with the schemas the registry
 queries read (``plans.tables``) and value shapes like the repo's
@@ -54,9 +55,9 @@ def _documents(rng: np.random.Generator, n: int) -> list[str]:
 
 
 def generate_tables(out_dir: str, seed: int, sf: float) -> list[str]:
-    """Write customer, orders, lineitem, events, documents and
-    embeddings at scale factor ``sf`` into ``out_dir``; return the
-    paths. The same seed and sf give the same rows."""
+    """Write customer, orders, lineitem, events, documents, embeddings,
+    nation and supplier at scale factor ``sf`` into ``out_dir``; return
+    the paths. The same seed and sf give the same rows."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
     n_cust = max(int(150_000 * sf), 20)
@@ -66,6 +67,7 @@ def generate_tables(out_dir: str, seed: int, sf: float) -> list[str]:
     n_users = max(n_ev // 60, 5)
     n_doc = max(int(50_000 * sf), 50)
     n_vec = max(int(20_000 * sf), 20)
+    n_supp = max(int(10_000 * sf), 10)
     paths = [
         _write(out_dir, "customer", {
             "c_custkey": np.arange(n_cust, dtype=np.int64),
@@ -85,7 +87,7 @@ def generate_tables(out_dir: str, seed: int, sf: float) -> list[str]:
         _write(out_dir, "lineitem", {
             "l_orderkey": rng.integers(0, n_ord, n_li).astype(np.int64),
             "l_partkey": rng.integers(0, max(int(200_000 * sf), 10), n_li).astype(np.int64),
-            "l_suppkey": rng.integers(0, max(int(10_000 * sf), 10), n_li).astype(np.int64),
+            "l_suppkey": rng.integers(0, n_supp, n_li).astype(np.int64),
             "l_linenumber": rng.integers(1, 8, n_li).astype(np.int32),
             "l_quantity": rng.integers(1, 51, n_li).astype(np.float64),
             "l_extendedprice": _money(rng, 900, 105_000, n_li),
@@ -118,5 +120,16 @@ def generate_tables(out_dir: str, seed: int, sf: float) -> list[str]:
         "vec_id": np.arange(n_vec, dtype=np.int64),
         "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
         "label": rng.integers(0, 10, n_vec).astype(np.int32),
+    }))
+    paths.append(_write(out_dir, "nation", {
+        "n_nationkey": np.arange(25, dtype=np.int32),
+        "n_name": [f"NATION_{i}" for i in range(25)],
+        "n_regionkey": (np.arange(25) % 5).astype(np.int32),
+    }))
+    paths.append(_write(out_dir, "supplier", {
+        "s_suppkey": np.arange(n_supp, dtype=np.int64),
+        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
+        "s_nationkey": rng.integers(0, 25, n_supp).astype(np.int32),
+        "s_acctbal": _money(rng, -999.99, 9999.99, n_supp),
     }))
     return paths

@@ -20,7 +20,10 @@ REPO = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 from probe import covered_s  # noqa: E402
-from run import _tail  # noqa: E402
+from run import MIN_PASSES, _tail  # noqa: E402
+
+# A cold pass, at least one warm-up pass, then the measured ones.
+MIN_ATTEMPTED = 2 + MIN_PASSES
 
 # Runs the benchmark with one expected output made wrong after set-up.
 _TAMPER = """
@@ -33,7 +36,8 @@ def tamper(wl):
         word, count = wl.expected["wc"][0].rsplit(" ", 1)
         wl.expected["wc"][0] = f"{{word}} {{int(count) + 1}}"
     else:
-        wl.oracle["tpch_q1_pricing_summary"].pop()
+        q = "tpch_q1_pricing_summary"
+        wl.oracle[q] = wl.oracle[q].iloc[:-1]
 
 for cls in workloads.WORKLOADS.values():
     orig = cls.make_inputs
@@ -45,10 +49,29 @@ for cls in workloads.WORKLOADS.values():
 sys.exit(run.main(sys.argv[1:]))
 """
 
+# Runs the benchmark with the exec call of the first traced pass raising.
+_RAISE = """
+import sys
+sys.path[:0] = [{repo!r}, {here!r}]
+import run, workloads
 
-def _run(workload: str, *prefix: str) -> dict:
+orig = workloads.Tracer.span
+raised = []
+
+def span(rec, name, fn):
+    if name == "exec" and not raised:
+        raised.append(name)
+        raise RuntimeError("injected failure")
+    return orig(rec, name, fn)
+
+workloads.Tracer.span = staticmethod(span)
+sys.exit(run.main(sys.argv[1:]))
+"""
+
+
+def _run(workload: str, *prefix: str, trace: int = 0) -> dict:
     cmd = [*prefix, "--workload", workload, "--seed", "3", "--seconds", "2",
-           "--trace", "0", "--size", "tiny"]
+           "--trace", str(trace), "--size", "tiny"]
     proc = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     return json.loads(proc.stdout.strip().splitlines()[-1])
@@ -66,7 +89,7 @@ def test_tiny_run_prints_every_end_to_end_metric_and_passes_checks(workload):
     want = {m["name"]: m["unit"] for m in _spec()["end_to_end"]}
     assert {k: v["unit"] for k, v in res["metrics"].items()} == want
     assert all(v["value"] > 0 for v in res["metrics"].values())
-    assert res["correct"] and res["failed"] == 0 and res["attempted"] >= 5
+    assert res["correct"] and res["failed"] == 0 and res["attempted"] >= MIN_ATTEMPTED
     assert res["metrics"]["ok_frac"]["value"] == 1.0
 
 
@@ -90,3 +113,13 @@ def test_covered_s_merges_overlapping_stages_and_clips_to_window():
     stages = [{"start_ms": 0, "end_ms": 400}, {"start_ms": 300, "end_ms": 600},
               {"start_ms": 900, "end_ms": 1500}]
     assert covered_s(stages, 100, 1200) == pytest.approx(0.8)
+
+
+@pytest.mark.parametrize("workload", ["mr_corpus", "df_queries"])
+def test_traced_pass_that_raises_is_counted_and_the_run_goes_on(workload):
+    code = _RAISE.format(repo=REPO, here=HERE)
+    res = _run(workload, sys.executable, "-c", code, trace=1)
+    assert not res["correct"]
+    assert res["failed"] == 1 and res["attempted"] >= MIN_ATTEMPTED
+    want = {m["name"]: m["unit"] for m in _spec()["per_layer"]}
+    assert {k: v["unit"] for k, v in res["metrics"].items()} == want

@@ -5,8 +5,8 @@ A workload object offers:
 
 - ``make_inputs(dir)``: generate the seeded inputs and the expected
   results (the set-up work); returns the input size in MB;
-- ``verify_setup()``: one-time checks that need Spark;
-- ``run_pass(tracer)``: run one pass; outputs are kept for ``check``;
+- ``steps(tracer)``: the calls that make up one pass, in order (one
+  per job or query); outputs are kept for ``check``;
 - ``check()``: True when every output of the last pass matched;
 - ``layer_metrics(calls, nproc)``: per-layer numbers of one traced pass;
 - ``probe_layers()``: driver-side throughput of single functions.
@@ -14,8 +14,8 @@ A workload object offers:
 
 from __future__ import annotations
 
+import functools
 import glob
-import math
 import os
 import shutil
 import statistics
@@ -35,6 +35,7 @@ from mit6_5840_6_824_lab1_mapreduce_spark.operators.mapreduce import (
 from mit6_5840_6_824_lab1_mapreduce_spark.operators.mrapps import APPS
 from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
 from mit6_5840_6_824_lab1_mapreduce_spark.sources.text import write_text_output
+from tests.oracle_check import _normalize, duckdb_connect
 
 N_REDUCE = 10
 MR_APPS = ("wc", "indexer")
@@ -45,12 +46,19 @@ DF_QUERIES = (
     "tpch_q3_shipping_priority",
     "tpch_q18_large_volume_customers",
     "events_sessionization",
-    "dedup_minhash_lsh",
     "similarity_topk_batch",
 )
-# (corpus files, corpus bytes) and df scale factor, by --size.
+# The driver-sequenced loops: MinHash -> LSH -> connected components
+# with the overlap thread, a 5-round PageRank, the BPE merge rounds.
+# pipeline_clean_corpus runs the MinHash/LSH pairs that
+# dedup_minhash_lsh returns, so that query is not run on its own.
+PIPELINE_QUERIES = ("pipeline_clean_corpus", "graph_pagerank_nations", "tokenizer_bpe_merges")
+# The tables the queries read; their bytes are the input size.
+QUERY_TABLES = ("customer", "orders", "lineitem", "events", "documents", "embeddings",
+                "supplier", "nation")
+# Corpus files and bytes, and the tables' scale factor, by --size.
 SIZES = {
-    "standard": {"files": 16, "bytes": 2_000_000, "sf": 0.01},
+    "standard": {"files": 16, "bytes": 2_000_000, "sf": 0.001},
     "tiny": {"files": 2, "bytes": 20_000, "sf": 0.001},
 }
 
@@ -131,29 +139,28 @@ class MrCorpus:
         self.input_mb = sum(os.path.getsize(p) for p in paths) / 1e6
         return self.input_mb
 
-    def verify_setup(self) -> bool:
-        return True
-
-    def run_pass(self, tracer: Tracer | None) -> None:
+    def steps(self, tracer: Tracer | None) -> list:
         self._pass += 1
         self._outs = {}
-        for app in MR_APPS:
-            out = os.path.join(self.work, "out", f"{self._pass}-{app}")
-            self._outs[app] = out
-            map_fn, reduce_fn = APPS[app]
+        return [functools.partial(self._run_app, app, tracer) for app in MR_APPS]
 
-            def build():
-                return run_job(
-                    whole_text_input(self.spark, self.glob), map_fn, reduce_fn,
-                    n_reduce=N_REDUCE,
-                )
+    def _run_app(self, app: str, tracer: Tracer | None) -> None:
+        out = os.path.join(self.work, "out", f"{self._pass}-{app}")
+        self._outs[app] = out
+        map_fn, reduce_fn = APPS[app]
 
-            if tracer is None:
-                write_text_output(build(), out, n_reduce=N_REDUCE)
-            else:
-                rec = tracer.call(app)
-                rdd = tracer.span(rec, "build", build)
-                tracer.span(rec, "exec", lambda: write_text_output(rdd, out, n_reduce=N_REDUCE))
+        def build():
+            return run_job(
+                whole_text_input(self.spark, self.glob), map_fn, reduce_fn,
+                n_reduce=N_REDUCE,
+            )
+
+        if tracer is None:
+            write_text_output(build(), out, n_reduce=N_REDUCE)
+        else:
+            rec = tracer.call(app)
+            rdd = tracer.span(rec, "build", build)
+            tracer.span(rec, "exec", lambda: write_text_output(rdd, out, n_reduce=N_REDUCE))
 
     def check(self) -> bool:
         ok = True
@@ -217,108 +224,118 @@ class MrCorpus:
         return m
 
 
-def _normalize(pdf) -> list[tuple]:
-    """Order-free, type-free form of a result: columns sorted by name,
-    every value as a string, rows sorted."""
-    cols = sorted(pdf.columns)
-
-    def conv(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return "<null>"
-        if isinstance(v, float):
-            return repr(v)
-        if hasattr(v, "tolist"):
-            v = v.tolist()
-        if isinstance(v, (list, tuple)):
-            return "[" + ",".join(conv(x) for x in v) + "]"
-        return str(v)
-
-    return sorted(tuple(conv(v) for v in row) for row in pdf[cols].itertuples(index=False))
-
-
 class DfQueries:
-    """wc and indexer semantics through the DataFrame registry, joined
-    by six JVM-only headline queries. Each query is forced with an
-    all-column xxhash64 -> bit_xor checksum, so Catalyst cannot prune
-    work, and checked against a checksum verified once against the
-    query's DuckDB oracle."""
+    """Queries through the DataFrame registry, each forced with an
+    aggregate over an all-column xxhash64 (row count, bit_xor and sum
+    of the hashes), so Catalyst cannot prune work:
+
+    - wc and indexer semantics (``wc_wordcount``,
+      ``indexer_inverted_index``) and five JVM-only headline queries;
+    - the ``pipeline_loops`` group (``PIPELINE_QUERIES``), whose many
+      small driver-sequenced jobs make per-job and per-stage overhead
+      dominate.
+
+    The first pass also collects each full result and compares it with
+    the query's DuckDB oracle; later passes are checked against the
+    checksum of the result that matched."""
 
     name = "df_queries"
+    queries = DF_QUERIES + PIPELINE_QUERIES
 
     def __init__(self, spark, work: str, seed: int, size: str):
         self.spark, self.work, self.seed = spark, work, seed
         self.sf = SIZES[size]["sf"]
-        self.verified: dict[str, int] = {}
-        self._sums: dict[str, int | None] = {}
+        # Checksum of each query's result once it matched the oracle
+        # (None: it did not match).
+        self.verified: dict[str, tuple | None] = {}
+        self._sums: dict[str, tuple] = {}
+        self._full: dict = {}
 
     def make_inputs(self, in_dir: str) -> float:
-        import duckdb
-
-        paths = generate_tables(in_dir, self.seed, self.sf)
+        generate_tables(in_dir, self.seed, self.sf)
         self.sf_dir = in_dir
-        con = duckdb.connect()
+        con = duckdb_connect(in_dir)
         try:
-            for p in paths:
-                t = os.path.basename(p)[: -len(".parquet")]
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-            self.oracle = {q: _normalize(con.sql(REGISTRY[q].oracle).df()) for q in DF_QUERIES}
+            self.oracle = {q: con.sql(REGISTRY[q].oracle).df() for q in self.queries}
         finally:
             con.close()
-        self.input_mb = sum(os.path.getsize(p) for p in paths) / 1e6
+        self.input_mb = sum(
+            os.path.getsize(os.path.join(in_dir, f"{t}.parquet")) for t in QUERY_TABLES
+        ) / 1e6
         return self.input_mb
 
     @staticmethod
     def _checksum_frame(df):
         from pyspark.sql import functions as F
 
-        return df.select(F.xxhash64(*df.columns).alias("_h")).agg(F.bit_xor("_h"))
+        h = df.select(F.xxhash64(*df.columns).alias("_h"))
+        # XOR alone cancels rows that appear twice; the count and the
+        # (overflow-free) decimal sum do not.
+        return h.agg(F.count("*"), F.bit_xor("_h"), F.sum(F.col("_h").cast("decimal(38,0)")))
 
-    def verify_setup(self) -> bool:
-        """Compare each query's full result with its DuckDB oracle once;
-        keep the checksum of the verified result for the passes."""
-        ok = True
-        for q in DF_QUERIES:
-            df = REGISTRY[q].fn(self.spark, self.sf_dir)
-            if _normalize(df.toPandas()) == self.oracle[q]:
-                self.verified[q] = self._checksum_frame(df).collect()[0][0]
-            else:
-                ok = False
-        return ok
-
-    def run_pass(self, tracer: Tracer | None) -> None:
+    def steps(self, tracer: Tracer | None) -> list:
         self._sums = {}
-        for q in DF_QUERIES:
-            fn = REGISTRY[q].fn
-            if tracer is None:
-                cdf = self._checksum_frame(fn(self.spark, self.sf_dir))
-                self._sums[q] = cdf.collect()[0][0]
-            else:
-                rec = tracer.call(q)
-                cdf = tracer.span(rec, "build", lambda: self._checksum_frame(fn(self.spark, self.sf_dir)))
-                tracer.span(rec, "plan", lambda: cdf._jdf.queryExecution().executedPlan())
-                self._sums[q] = tracer.span(rec, "exec", lambda: cdf.collect()[0][0])
+        return [functools.partial(self._run_query, q, tracer) for q in self.queries]
+
+    def _run_query(self, q: str, tracer: Tracer | None) -> None:
+        def build():
+            return REGISTRY[q].fn(self.spark, self.sf_dir)
+
+        if tracer is None and q not in self.verified:
+            # First pass: also collect the full result, which ``check``
+            # compares with the oracle. Cached, so the query runs once
+            # for both reads.
+            df = build().cache()
+            self._full[q] = df.toPandas()
+            self._sums[q] = tuple(self._checksum_frame(df).collect()[0])
+            df.unpersist()
+        elif tracer is None:
+            self._sums[q] = tuple(self._checksum_frame(build()).collect()[0])
+        else:
+            rec = tracer.call(q)
+            cdf = tracer.span(rec, "build", lambda: self._checksum_frame(build()))
+            tracer.span(rec, "plan", lambda: cdf._jdf.queryExecution().executedPlan())
+            self._sums[q] = tracer.span(rec, "exec", lambda: tuple(cdf.collect()[0]))
+            rec["files"] = cdf.inputFiles()
 
     def check(self) -> bool:
-        return all(q in self.verified and self._sums.get(q) == self.verified[q] for q in DF_QUERIES)
+        """Compare any full results with their oracles (column names,
+        row count, values) and keep the checksum of each that matched;
+        then compare every checksum of the pass with the verified one."""
+        for q, got in self._full.items():
+            want = self.oracle[q]
+            match = (
+                sorted(got.columns) == sorted(want.columns)
+                and len(got) == len(want)
+                and _normalize(got).equals(_normalize(want))
+            )
+            self.verified[q] = self._sums[q] if match else None
+        self._full = {}
+        return all(
+            self.verified.get(q) is not None and self._sums.get(q) == self.verified[q]
+            for q in self.queries
+        )
 
     def discard_outputs(self) -> float:
         return 0.0
 
     def layer_metrics(self, calls: list[dict], nproc: int) -> dict:
         m = {}
+        files = set()
         for rec in calls:
             p = f"queries.{rec['name']}."
             for span in ("build", "plan", "exec"):
                 m[p + span + "_s"] = _span_s(rec, span)
             m[p + "jobs"] = rec["jobs"]
             m[p + "stages"] = len(rec["stages"])
+            files.update(rec["files"])
+        # Files the final plans scan; a checkpointed part of a plan
+        # scans none.
+        m["plans.scan_input_mb"] = sum(os.path.getsize(f.removeprefix("file:")) for f in files) / 1e6
         return m
 
     def probe_layers(self) -> dict:
-        files = {f for q in DF_QUERIES for f in REGISTRY[q].fn(self.spark, self.sf_dir).inputFiles()}
-        return {
-            "plans.scan_input_mb": sum(os.path.getsize(f.removeprefix("file:")) for f in files) / 1e6
-        }
+        return {}
 
 
 WORKLOADS = {w.name: w for w in (MrCorpus, DfQueries)}
