@@ -15,11 +15,12 @@
 from __future__ import annotations
 
 import math
-import multiprocessing
 import os
 import platform
 import random
+import signal
 import subprocess
+import sys
 import time
 
 CANARY_LOOPS = 1_000_000
@@ -59,7 +60,7 @@ def _loops(n_spin: int, n_chase: int) -> tuple[float, float]:
 
 
 class Canary:
-    """A pool of ``n`` spawned processes that each run two fixed loops:
+    """``n`` child processes that each run two fixed loops on request:
     an arithmetic one (core speed) and a pointer chase (memory speed).
 
     A reading is the geometric mean of the two loops' mean times over
@@ -68,24 +69,69 @@ class Canary:
     the chase alone missed part of the JVM workload's; their mean
     tracked both (README.md, Measured spread).
 
-    Spawned, not forked: the driver process holds py4j threads, and
-    forking a threaded process is unsafe. The pool is started once
-    (building each process's chain), so a reading times only the loops."""
+    Each child is this file run as a script, reading requests on its
+    stdin and answering on its stdout. It is a fresh interpreter, not a
+    fork: the driver process holds py4j threads, and forking a threaded
+    process is unsafe. Nothing else is started for it, and a child ends
+    when its stdin closes, so ``close`` (or the driver's exit) ends every
+    one. The children are started once (building each one's chain), so a
+    reading times only the loops."""
 
     def __init__(self, n: int):
         self.n = n
-        self._pool = multiprocessing.get_context("spawn").Pool(n)
-        self._pool.starmap(_loops, [(1000, 1000)] * n, chunksize=1)
+        self._procs: list[subprocess.Popen] = []
+        try:
+            for _ in range(n):
+                self._procs.append(subprocess.Popen(
+                    [sys.executable, "-B", os.path.abspath(__file__)],
+                    stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+                ))
+            self._ask(1000, 1000)
+        except BaseException:
+            self.close()
+            raise
+
+    def _ask(self, n_spin: int, n_chase: int) -> list[tuple[float, float]]:
+        for p in self._procs:
+            p.stdin.write(f"{n_spin} {n_chase}\n")
+            p.stdin.flush()
+        res = []
+        for p in self._procs:
+            line = p.stdout.readline()
+            if not line:
+                raise RuntimeError(f"canary process {p.pid} ended")
+            spin, chase = line.split()
+            res.append((float(spin), float(chase)))
+        return res
 
     def time(self) -> float:
-        res = self._pool.starmap(_loops, [(CANARY_LOOPS, CHASE_STEPS)] * self.n, chunksize=1)
+        res = self._ask(CANARY_LOOPS, CHASE_STEPS)
         spin = sum(r[0] for r in res) / self.n
         chase = sum(r[1] for r in res) / self.n
         return math.sqrt(spin * chase)
 
     def close(self) -> None:
-        self._pool.close()
-        self._pool.join()
+        for p in self._procs:
+            try:
+                p.stdin.close()
+            except OSError:
+                pass
+        for p in self._procs:
+            try:
+                p.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                p.kill()
+                p.wait()
+            p.stdout.close()
+        self._procs = []
+
+
+def _serve() -> None:
+    """A canary child: answer each "n_spin n_chase" line with the two
+    loop times, until stdin closes."""
+    while line := sys.stdin.readline():
+        n_spin, n_chase = map(int, line.split())
+        print(*_loops(n_spin, n_chase), flush=True)
 
 
 def cpu_ticks() -> tuple[int, int]:
@@ -97,11 +143,10 @@ def cpu_ticks() -> tuple[int, int]:
     return fields[7], sum(fields[:8])
 
 
-def tree_cpu_s(root: int) -> float:
-    """User+system CPU seconds of ``root`` and all its live descendants
-    (the driver, the JVM it launched and the JVM's Python workers)."""
-    children: dict[int, list[int]] = {}
-    cpu: dict[int, int] = {}
+def _proc_table() -> dict[int, tuple[int, int, int, str]]:
+    """{pid: (parent pid, start time, user+system CPU, state)} of every
+    process, times in clock ticks, from /proc."""
+    out = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
             continue
@@ -111,15 +156,60 @@ def tree_cpu_s(root: int) -> float:
         except OSError:
             continue
         rest = stat[stat.rindex(")") + 2:].split()
-        pid = int(entry)
-        children.setdefault(int(rest[1]), []).append(pid)
-        cpu[pid] = int(rest[11]) + int(rest[12])
-    total, todo = 0, [root]
+        out[int(entry)] = (int(rest[1]), int(rest[19]), int(rest[11]) + int(rest[12]), rest[0])
+    return out
+
+
+def _tree(root: int, table: dict) -> list[int]:
+    children: dict[int, list[int]] = {}
+    for pid, (ppid, *_) in table.items():
+        children.setdefault(ppid, []).append(pid)
+    out, todo = [], [root]
     while todo:
         pid = todo.pop()
-        total += cpu.get(pid, 0)
+        out.append(pid)
         todo.extend(children.get(pid, []))
-    return total / os.sysconf("SC_CLK_TCK")
+    return out
+
+
+def tree_cpu_s(root: int) -> float:
+    """User+system CPU seconds of ``root`` and all its live descendants
+    (the driver, the JVM it launched and the JVM's Python workers)."""
+    table = _proc_table()
+    ticks = sum(table[pid][2] for pid in _tree(root, table) if pid in table)
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def descendants(root: int) -> set[tuple[int, int]]:
+    """(pid, start time) of every live descendant of ``root``."""
+    table = _proc_table()
+    return {(pid, table[pid][1]) for pid in _tree(root, table)[1:]}
+
+
+def wait_gone(procs: set[tuple[int, int]], timeout: float = 60.0) -> None:
+    """Wait until every process in ``procs`` (from ``descendants``) has
+    ended; kill those still there after ``timeout`` seconds. A process
+    whose parent ended first is no longer this process's child, so it is
+    polled in /proc rather than waited for."""
+    deadline = time.monotonic() + timeout
+    killed = False
+    while True:
+        table = _proc_table()
+        # A zombie has ended; only its parent's wait is missing.
+        left = [pid for pid, start in procs
+                if pid in table and table[pid][1] == start and table[pid][3] != "Z"]
+        if not left:
+            return
+        if time.monotonic() > deadline:
+            if killed:
+                raise RuntimeError(f"processes {left} did not end")
+            for pid in left:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except OSError:
+                    pass
+            killed, deadline = True, time.monotonic() + 10.0
+        time.sleep(0.05)
 
 
 def host_context(repo_root: str, nproc: int) -> dict:
@@ -199,3 +289,7 @@ def stage_summary(stages: list[dict]) -> dict:
     out = {k: sum(s[k] for s in stages) for k in keys}
     out["stages"] = len(stages)
     return out
+
+
+if __name__ == "__main__":
+    _serve()

@@ -74,18 +74,25 @@ def _prepare_env(work: str) -> None:
 
 
 def _stop_spark(spark) -> None:
-    """Stop the session and wait for the JVM to exit (it exits when its
-    stdin closes)."""
+    """Stop the session, close the JVM (it exits when its stdin closes)
+    and wait until it and every Python worker it started have ended."""
+    import probe
     from pyspark import SparkContext
 
-    spark.stop()
-    gw = SparkContext._gateway
-    if gw is not None:
-        gw.shutdown()
-        gw.proc.stdin.close()
-        gw.proc.wait(timeout=60)
-        SparkContext._gateway = None
-        SparkContext._jvm = None
+    left = probe.descendants(os.getpid())
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        gw = SparkContext._gateway
+        if gw is not None:
+            gw.shutdown()
+            gw.proc.stdin.close()
+        probe.wait_gone(left)
+        if gw is not None:
+            gw.proc.wait()
+            SparkContext._gateway = None
+            SparkContext._jvm = None
 
 
 class Runner:
@@ -242,8 +249,7 @@ def run(args) -> dict:
         probes = wl.probe_layers() if args.trace else {}
     finally:
         canary.close()
-        if spark is not None:
-            _stop_spark(spark)
+        _stop_spark(spark)
     steal1, ticks1 = probe.cpu_ticks()
     run_s = time.perf_counter() - t_start
 

@@ -12,6 +12,8 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
+import uuid
 
 import pytest
 
@@ -19,7 +21,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-from probe import covered_s  # noqa: E402
+from probe import Canary, covered_s, descendants  # noqa: E402
 from run import MIN_PASSES, _tail  # noqa: E402
 
 # A cold pass, at least one warm-up pass, then the measured ones.
@@ -69,12 +71,46 @@ sys.exit(run.main(sys.argv[1:]))
 """
 
 
+def _marked(mark: bytes) -> list[str]:
+    """Command lines of the live processes whose environment holds ``mark``."""
+    out = []
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/environ", "rb") as f:
+                if mark not in f.read().split(b"\0"):
+                    continue
+            with open(f"/proc/{entry}/cmdline", "rb") as f:
+                out.append(f.read().replace(b"\0", b" ").decode())
+        except OSError:  # ended meanwhile
+            continue
+    return out
+
+
 def _run(workload: str, *prefix: str, trace: int = 0) -> dict:
+    """Run the benchmark and return its result line. Every process the
+    run starts inherits a marker in its environment; none may be alive
+    once the run has exited. Output goes to files, not pipes, so that
+    waiting for the run does not also wait for processes holding a pipe."""
     cmd = [*prefix, "--workload", workload, "--seed", "3", "--seconds", "2",
            "--trace", str(trace), "--size", "tiny"]
-    proc = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True, timeout=300)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    token = uuid.uuid4().hex
+    env = dict(os.environ, BENCH_TEST_RUN=token)
+    with tempfile.TemporaryFile("w+") as out, tempfile.TemporaryFile("w+") as err:
+        proc = subprocess.Popen(cmd, cwd=REPO, stdout=out, stderr=err, text=True, env=env)
+        try:
+            proc.wait(timeout=300)
+        finally:
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
+        left = _marked(f"BENCH_TEST_RUN={token}".encode())
+        out.seek(0)
+        err.seek(0)
+        assert proc.returncode == 0, err.read()[-3000:]
+        assert not left, f"processes left running: {left}"
+        return json.loads(out.read().strip().splitlines()[-1])
 
 
 def _spec() -> dict:
@@ -107,6 +143,14 @@ def test_tail_needs_ten_samples_beyond_it():
     p, v = _tail([float(x) for x in range(1, 101)])
     assert (p, v) == (90, 90.0)
     assert sum(x > v for x in range(1, 101)) == 10
+
+
+def test_canary_leaves_no_process_behind():
+    before = descendants(os.getpid())
+    canary = Canary(2)
+    assert canary.time() > 0
+    canary.close()
+    assert descendants(os.getpid()) - before == set()
 
 
 def test_covered_s_merges_overlapping_stages_and_clips_to_window():
